@@ -33,13 +33,14 @@ from pyspark.sql import functions as F
 from graphrag_litex_spark.operators.iterutils import (
     hard_checkpoint,
     loop_shuffle_partitions,
+    probe_local_graph,
     release,
 )
 
 
 def _cc_union_find_df(spark, ids: list, pairs: list, id_col: str) -> DataFrame:
-    """Small-graph physical strategy: union-find over the probe-collected
-    (ids, pairs), result broadcast back as a local frame.
+    """Small-graph physical strategy: union-find over the probed local
+    graph, result broadcast back as a local frame.
 
     Same adaptive stance as Catalyst's broadcast-vs-shuffle join choice: the
     label graph is ALREADY reduced (distinct names, not mentions), so when it
@@ -102,9 +103,10 @@ def connected_components(
     ``vertices``: one column ``id_col`` (distinct ids).
     ``edges``: (src_col, dst_col) pairs; symmetrized internally.
 
-    Adaptive: state (vertices + similarity edges) below ``driver_threshold``
-    rows runs the driver-local union-find (identical output); larger graphs
-    run a distributed loop chosen by ``algorithm``:
+    Adaptive: a graph that `iterutils.probe_local_graph` finds under
+    ``driver_threshold`` runs the driver-local union-find (identical
+    output); larger graphs, and NULL or non-string ids, run a distributed
+    loop chosen by ``algorithm``:
 
     * ``"minlabel"`` — neighbor-min propagation, one checkpoint job per
       round, rounds = component diameter. The right default for entity
@@ -119,45 +121,16 @@ def connected_components(
 
     Both produce byte-identical output (asserted in tests/test_cc.py).
     """
-    sym_plan = (
+    local = probe_local_graph(
+        edges, src_col, dst_col, driver_threshold, vertices=vertices, vertex_col=id_col
+    )
+    if local is not None:
+        return _cc_union_find_df(vertices.sparkSession, local.vertices, local.und, id_col)
+    sym = hard_checkpoint(
         edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
         .union(edges.select(F.col(dst_col).alias("u"), F.col(src_col).alias("v")))
         .distinct()
     )
-    # Driver-local regime decided by bounded limit-probes over the RAW
-    # inputs (narrow limits — no shuffle, no eager checkpoints, no count
-    # jobs, and an over-threshold graph pays only a cap-bounded scan before
-    # the distributed loop). The symmetrize+dedup then happens locally —
-    # identical edge set, so identical union-find labels. Raw edge rows
-    # bound the deduped state (|sym| <= 2x raw), so the regime condition
-    # `raw_edges*2 + |vertices| <= driver_threshold` implies the old
-    # |sym| + |vertices| <= driver_threshold one.
-    if driver_threshold > 0:
-        edge_cap = driver_threshold // 2
-        edge_rows = (
-            edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-            .limit(edge_cap + 1)
-            .collect()
-        )
-        if len(edge_rows) <= edge_cap:
-            vert_budget = driver_threshold - 2 * len(edge_rows)
-            vert_rows = (
-                vertices.select(F.col(id_col).alias("u"))
-                .limit(max(vert_budget, 0) + 1)
-                .collect()
-            )
-            if len(vert_rows) <= vert_budget:
-                sym_local = set()
-                for r in edge_rows:
-                    sym_local.add((r["u"], r["v"]))
-                    sym_local.add((r["v"], r["u"]))
-                return _cc_union_find_df(
-                    vertices.sparkSession,
-                    [r["u"] for r in vert_rows],
-                    sorted(sym_local),
-                    id_col,
-                )
-    sym = hard_checkpoint(sym_plan)
     verts = hard_checkpoint(vertices.select(F.col(id_col).alias("u")))
     n_state = verts.count() + sym.count()
     if algorithm == "alternating":

@@ -24,11 +24,11 @@ recursion shape, and the stats formulas replicate the reference exactly:
     graph, as the reference does for sub-levels too (:186).
 
 Adaptive physical strategy (same stance as Catalyst's broadcast-vs-shuffle
-choice, and as cc.py): the community graph is the DEDUPLICATED entity
-graph — orders of magnitude smaller than the corpus — so when its state
-(vertices + undirected edges) fits under ``driver_threshold`` the ENTIRE
-hierarchy runs driver-locally in one pass (~30 tiny shuffle jobs collapse
-to ~4), byte-identical to the distributed loop (asserted in
+choice): the community graph is the DEDUPLICATED entity graph — orders of
+magnitude smaller than the corpus — so when the one small-graph valve
+(`iterutils.probe_local_graph`) finds it under ``driver_threshold`` the
+ENTIRE hierarchy runs driver-locally in one pass (~30 tiny shuffle jobs
+collapse to ~4), byte-identical to the distributed loop (asserted in
 tests/test_communities.py). Larger graphs run the distributed DataFrame
 loop, which is the path taken at 10^12-turn scale.
 
@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from graphrag_litex_spark.operators.iterutils import (
     hard_checkpoint,
     loop_shuffle_partitions,
+    probe_local_graph,
     release,
 )
 
@@ -109,7 +110,7 @@ def _enforce_min_size_py(labels: dict, min_size: int) -> dict:
 
 def _hierarchy_py(
     ids: list,
-    und_pairs: list,
+    adj: dict,
     levels: int,
     min_size: int,
     iters: int,
@@ -118,11 +119,6 @@ def _hierarchy_py(
     """Full hierarchy driver-locally -> [(level, community_id, parent,
     entity_id)] with the SAME ids/semantics as the distributed level loop.
     ``seed`` warm-starts the level-0 LPA only (sub-levels re-cluster)."""
-    adj: dict = {}
-    for a, b in und_pairs:
-        adj.setdefault(a, []).append(b)
-        adj.setdefault(b, []).append(a)
-
     l0 = _enforce_min_size_py(_lpa_py(ids, adj, iters, seed=seed), min_size)
     rows = [(0, "0_" + lbl, None, u) for u, lbl in l0.items()]
     prev: dict = {}
@@ -178,19 +174,16 @@ def _local_df(spark, rows: list, columns: list[str], schema: str) -> DataFrame:
     return spark.createDataFrame(pd.DataFrame(rows, columns=columns), schema=schema)
 
 
-def _lpa_driver_local(
-    spark, ids: list, sym_pairs: list, iters: int, seed: dict | None = None
-) -> DataFrame:
-    """Small-graph physical strategy for a single LPA call."""
-    adj: dict = {}
-    for a, b in sym_pairs:
-        adj.setdefault(a, []).append(b)
-    return _local_df(
-        spark,
-        list(_lpa_py(ids, adj, iters, seed=seed).items()),
-        ["entity_id", "label"],
-        "entity_id string, label string",
-    )
+def _seed_dict(seed_labels: DataFrame | None, ids: list) -> dict | None:
+    """Warm-start labels of the driver-local vertices, or None."""
+    if seed_labels is None:
+        return None
+    idset = set(ids)
+    return {
+        r[0]: r[1]
+        for r in seed_labels.select("entity_id", "label").collect()
+        if r[0] in idset
+    } or None
 
 
 # ---- distributed loops ----------------------------------------------------
@@ -205,11 +198,14 @@ def label_propagation(
 ) -> DataFrame:
     """Synchronous LPA -> (entity_id, label); deterministic tie-breaking.
 
-    Adaptive: state below ``driver_threshold`` rows runs driver-locally
-    (identical output, ~5x fewer tiny Spark jobs); larger graphs run the
-    distributed loop below. Each distributed round is ONE eager checkpoint
-    job (the changed-count is folded into a scan of the cached result, not
-    a separate join job).
+    ``und_edges``: (u, v) simple undirected edges, one row per pair, as
+    ``_und_edges`` produces them.
+
+    Adaptive: a graph that `iterutils.probe_local_graph` finds under
+    ``driver_threshold`` runs driver-locally (identical output, ~5x fewer
+    tiny Spark jobs); larger graphs run the distributed loop below. Each
+    distributed round is ONE eager checkpoint job (the changed-count is
+    folded into a scan of the cached result, not a separate join job).
 
     ``seed_labels`` (entity_id, label) WARM-STARTS the loop: vertices
     found there initialize to the seeded label instead of their own id
@@ -223,6 +219,17 @@ def label_propagation(
     downstream quality is gated by the same modularity metric as the
     cold path.
     """
+    g = probe_local_graph(
+        und_edges, "u", "v", driver_threshold, vertices=vertices, vertex_col="entity_id"
+    )
+    if g is not None:
+        labels = _lpa_py(g.vertices, g.adj, iters, seed=_seed_dict(seed_labels, g.vertices))
+        return _local_df(
+            vertices.sparkSession,
+            list(labels.items()),
+            ["entity_id", "label"],
+            "entity_id string, label string",
+        )
     sym = hard_checkpoint(_sym(und_edges))
     init = vertices.select(F.col("entity_id").alias("u"))
     if seed_labels is not None:
@@ -235,15 +242,6 @@ def label_propagation(
         init = init.select("u", F.col("u").alias("label"))
     labels = hard_checkpoint(init)
     n_state = labels.count() + sym.count()
-    if n_state <= driver_threshold:
-        rows = labels.select("u", "label").collect()
-        ids = [r[0] for r in rows]
-        seed = {r[0]: r[1] for r in rows if r[0] != r[1]} or None
-        pairs = [(r[0], r[1]) for r in sym.select("u", "v").collect()]
-        out = _lpa_driver_local(vertices.sparkSession, ids, pairs, iters, seed=seed)
-        release(sym)
-        release(labels)
-        return out
     # with-block + finally: a mid-loop Spark exception must not leave the
     # session's shuffle-partition count overridden or leak checkpoint RDDs.
     try:
@@ -325,7 +323,7 @@ def detect_communities(
     """-> long-form membership (level int, community_id string,
     parent string, entity_id string); SURVEY.md §1 communities table.
 
-    Adaptive: when vertices + undirected edges fit under
+    Adaptive: when `iterutils.probe_local_graph` finds the graph under
     ``driver_threshold``, the whole hierarchy runs driver-locally
     (identical output, asserted in tests); larger graphs run the
     distributed per-level loop, with shuffle partitions sized to the
@@ -339,29 +337,27 @@ def detect_communities(
     (they are bounded by their parent community, not the corpus).
     """
     spark = nodes.sparkSession
-    und = hard_checkpoint(_und_edges(edges))
     vertices = nodes.select("entity_id")
-    n_state = und.count() + vertices.count()
-    if n_state <= driver_threshold:
-        ids = [r[0] for r in vertices.collect()]
-        pairs = [(r[0], r[1]) for r in und.collect()]
-        release(und)
-        seed = None
-        if seed_labels is not None:
-            idset = set(ids)
-            seed = {
-                r[0]: r[1]
-                for r in seed_labels.select("entity_id", "label").collect()
-                if r[0] in idset
-            } or None
-        rows = _hierarchy_py(ids, pairs, levels, min_size, lpa_iters, seed=seed)
+    g = probe_local_graph(
+        edges, "src_id", "dst_id", driver_threshold, vertices=vertices, vertex_col="entity_id"
+    )
+    if g is not None:
+        rows = _hierarchy_py(
+            g.vertices,
+            g.adj,
+            levels,
+            min_size,
+            lpa_iters,
+            seed=_seed_dict(seed_labels, g.vertices),
+        )
         return _local_df(
             spark,
             rows,
             ["level", "community_id", "parent", "entity_id"],
             "level int, community_id string, parent string, entity_id string",
         )
-
+    und = hard_checkpoint(_und_edges(edges))
+    n_state = und.count() + vertices.count()
     with loop_shuffle_partitions(spark, n_state):
         l0 = _enforce_min_size(
             label_propagation(

@@ -27,6 +27,9 @@ Scale notes (100 TB):
 - `k_core` is iterative peeling: each round one degree aggregation + two
   anti joins, lineage reset via hard_checkpoint (O(1) plan across rounds),
   convergence check folded into one cached-scan aggregate per round.
+- `k_truss`, `hop_distances` and `neighborhood_function` run driver-locally
+  when the one small-graph valve (`iterutils.probe_local_graph`) admits
+  the graph; `driver_threshold=0` forces their distributed loops.
 """
 
 from __future__ import annotations
@@ -34,7 +37,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphrag_litex_spark.operators.iterutils import hard_checkpoint, release
+from graphrag_litex_spark.operators.iterutils import (
+    hard_checkpoint,
+    probe_local_graph,
+    release,
+)
 
 
 def undirected_simple(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -263,44 +270,6 @@ def k_core(
     raise RuntimeError(f"k_core did not converge in {max_iters} rounds")
 
 
-def _probe_small_und(
-    edges: DataFrame, src: str, dst: str, driver_threshold: int
-) -> set | None:
-    """One bounded collect deciding the driver-local regime: the undirected
-    simple edge set as ``{(a, b)}``, a < b, computed LOCALLY from at most
-    ``driver_threshold // 4`` RAW edge rows, else None.
-
-    Probing the raw rows (a narrow ``limit`` — no shuffle) instead of the
-    distinct-deduped plan means a large graph pays only a cap-bounded scan
-    before falling through to the distributed loop, never a full
-    symmetrize+distinct map pass that the loop then recomputes. A graph
-    whose raw rows exceed the cap but whose deduped set is tiny goes
-    distributed — the threshold is a heuristic, the OUTPUT contract is
-    per-path identity.
-    """
-    cap = driver_threshold // 4
-    if cap <= 0:
-        return None
-    rows = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).limit(
-        cap + 1
-    ).collect()
-    if len(rows) > cap:
-        return None
-    # String ids only: the local replicas build hardcoded string-schema
-    # frames and compare with Python string ordering (== UTF8String byte
-    # order, since UTF-8 preserves code-point order). Non-string ids take
-    # the distributed path unchanged.
-    if any(
-        not (isinstance(r["a"], str) and isinstance(r["b"], str)) for r in rows
-    ):
-        return None
-    return {
-        (min(r["a"], r["b"]), max(r["a"], r["b"]))
-        for r in rows
-        if r["a"] != r["b"]
-    }
-
-
 def k_truss(
     edges: DataFrame,
     k: int,
@@ -331,19 +300,17 @@ def k_truss(
     spark = edges.sparkSession
     thresh = max(k - 2, 0)
     empty = spark.createDataFrame([], "a string, b string, support long")
-    # Adaptive driver-local peel (same stance and threshold as cc/pagerank/
-    # communities): below ``driver_threshold`` state rows the dozens of
-    # checkpointed round jobs are pure scheduler overhead; truss peeling is
-    # confluent, so the sequential golden reaches the identical fixpoint
-    # (differentially asserted at threshold 0 in tests). One bounded
-    # limit-probe collect decides the regime — no checkpoint, no count job
-    # on the small-graph path.
-    probe = _probe_small_und(edges, src, dst, driver_threshold)
-    if probe is not None:
-        # Same peel as oracle_graph.k_truss_golden, but honoring max_iters
-        # exactly like the distributed loop (a peel cascade must abort with
-        # the same RuntimeError, not stall the driver unbounded).
-        local = set(probe)
+    # Adaptive driver-local peel (the one small-graph valve,
+    # iterutils.probe_local_graph): below ``driver_threshold`` the dozens
+    # of checkpointed round jobs are pure scheduler overhead; truss peeling
+    # is confluent, so the sequential peel reaches the identical fixpoint
+    # (differentially asserted at threshold 0 in tests).
+    g = probe_local_graph(edges, src, dst, driver_threshold)
+    if g is not None:
+        # Honours max_iters exactly like the distributed loop: a round that
+        # removes every edge returns empty, a peel still moving after
+        # max_iters rounds raises the same RuntimeError.
+        local = set(g.und)
         supp: dict = {}
         for _ in range(max_iters):
             adj_l: dict[str, set] = {}
@@ -388,7 +355,10 @@ def k_truss(
             F.count(F.lit(1)).alias("n_all"),
         ).first()
         n_bad, n_all = (row["n_bad"] or 0), row["n_all"]
-        if n_all == 0:
+        if n_bad == n_all:
+            # Every edge fails (or none is left): the truss is empty now,
+            # with no extra round to observe it — the local peel's
+            # max_iters boundary.
             scored.unpersist()
             release(und)
             return empty
@@ -536,26 +506,35 @@ def neighborhood_function(
     driver.
     """
     spark = edges.sparkSession
-    # Adaptive driver-local exact BFS — the valve is gated on the VERTEX
-    # count (``driver_threshold`` vertices, default 256, deliberately
-    # tighter than the other graph valves): the sketch estimates equal the
-    # exact counts only while every ball stays in the sketches' exact
-    # coupon regime (DataSketches HLL leaves the exact SET mode around
-    # k/8 = 512 coupons at lg_k=12, so 256 keeps the largest possible
-    # ball — the whole vertex set — at half that bound). The golden
-    # replicates the same early-exit row set (asserted in tests).
-    probe = (
-        # 100k is the module-wide driver-transfer bound (edge rows); the
-        # exactness gate below is the tighter, vertex-count one.
-        _probe_small_und(edges, src, dst, 100_000)
-        if lg_k >= 12
-        else None
-    )
-    if probe is not None and len({x for p in probe for x in p}) <= driver_threshold:
-        from graphrag_litex_spark.oracle_graph import neighborhood_golden
-
-        totals_local = neighborhood_golden(probe, max_t)
-        return spark.createDataFrame(totals_local, "t int, reachable_pairs double")
+    # Adaptive driver-local exact BFS, gated on the VERTEX count: the
+    # sketch estimates equal the exact counts only while every ball stays
+    # in the sketches' exact coupon regime (DataSketches HLL leaves it
+    # around k/8 coupons, 512 at lg_k=12), so the gate is clamped to k/16
+    # whatever the caller passes — the largest possible ball, the whole
+    # vertex set, stays at half that bound (established from lg_k=12 up;
+    # smaller sketches always run distributed). 100k is the
+    # driver-transfer bound of the edge probe (iterutils.probe_local_graph).
+    gate = min(driver_threshold, (1 << lg_k) // 16) if lg_k >= 12 else 0
+    g = probe_local_graph(edges, src, dst, 100_000) if gate > 0 else None
+    if g is not None and len(g.vertices) <= gate:
+        # reached[t] = ordered pairs at distance exactly t, by one BFS per
+        # source; N(t) is its running sum, with the distributed loop's
+        # early exit (the first round that adds nothing is the last row).
+        reached = [len(g.adj)] + [0] * max_t
+        for s in g.adj:
+            seen, frontier = {s}, [s]
+            for t in range(1, max_t + 1):
+                frontier = list(
+                    dict.fromkeys(v for u in frontier for v in g.adj[u] if v not in seen)
+                )
+                seen.update(frontier)
+                reached[t] += len(frontier)
+        totals = [(0, float(reached[0]))]
+        for t in range(1, max_t + 1):
+            totals.append((t, totals[-1][1] + reached[t]))
+            if reached[t] == 0:
+                break
+        return spark.createDataFrame(totals, "t int, reachable_pairs double")
     und = undirected_simple(edges, src, dst)
     adj = hard_checkpoint(
         und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
@@ -669,18 +648,15 @@ def hop_distances(
     PageRank/CC (iterutils.py).
     """
     spark = edges.sparkSession
-    # Adaptive driver-local BFS (same stance and threshold as cc/pagerank):
-    # the per-hop join loop spends one checkpointed job per hop, which is
-    # pure overhead when the whole edge set fits on the driver. BFS has a
-    # unique fixpoint, so the local result is row-identical (source rows at
-    # dist 0 per occurrence, one row per reached (vertex, source), dist <=
-    # max_hops; asserted at threshold 0 in tests).
-    probe = _probe_small_und(edges, src, dst, driver_threshold)
-    if probe is not None:
-        adj: dict[str, list[str]] = {}
-        for a, b in probe:
-            adj.setdefault(a, []).append(b)
-            adj.setdefault(b, []).append(a)
+    # Adaptive driver-local BFS (the one small-graph valve,
+    # iterutils.probe_local_graph): the per-hop join loop spends one
+    # checkpointed job per hop, which is pure overhead when the whole edge
+    # set fits on the driver. BFS has a unique fixpoint, so the local
+    # result is row-identical (source rows at dist 0 per occurrence, one
+    # row per reached (vertex, source), dist <= max_hops; both paths take
+    # sources as ``str(s)``; asserted at threshold 0 in tests).
+    g = probe_local_graph(edges, src, dst, driver_threshold)
+    if g is not None:
         rows: list[tuple[str, str, int]] = [(str(s), str(s), 0) for s in sources]
         for s in {str(s) for s in sources}:
             dist = {s: 0}
@@ -688,7 +664,7 @@ def hop_distances(
             for hop in range(1, max_hops + 1):
                 nxt = []
                 for u in frontier:
-                    for v in adj.get(u, ()):
+                    for v in g.adj.get(u, ()):
                         if v not in dist:
                             dist[v] = hop
                             nxt.append(v)

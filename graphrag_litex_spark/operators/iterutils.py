@@ -1,4 +1,6 @@
-"""Iteration-safe checkpointing for DataFrame loops (CC, LPA).
+"""Iteration-safe checkpointing for DataFrame loops (CC, LPA), and the one
+small-graph valve every graph operator's driver-local regime goes through
+(:func:`probe_local_graph`).
 
 Iterative DataFrame algorithms (connected components, label propagation)
 re-join each iteration's output with itself. Two failure modes on stock
@@ -24,6 +26,8 @@ unavailable.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 
@@ -134,3 +138,62 @@ def release(df: DataFrame) -> None:
             ck.unpersist(blocking=False)
         except Exception:
             pass
+
+
+class LocalGraph(NamedTuple):
+    """A small graph collected to the driver by :func:`probe_local_graph`."""
+
+    und: list  # simple undirected edges (a, b), a < b, sorted; no self-loops
+    adj: dict  # vertex -> sorted neighbours over ``und`` (symmetric)
+    vertices: list  # vertex rows, first occurrence order; else sorted(adj)
+
+
+def probe_local_graph(
+    edges: DataFrame,
+    src: str,
+    dst: str,
+    driver_threshold: int,
+    vertices: DataFrame | None = None,
+    vertex_col: str | None = None,
+) -> LocalGraph | None:
+    """The small-graph valve: the graph as a :class:`LocalGraph` when it
+    fits on the driver, else None (run the distributed loop).
+
+    Regime rule: ``2 x raw edge rows + vertex rows <= driver_threshold``
+    (raw rows bound the symmetrized state, so this bounds what a
+    distributed loop would carry). Decided by bounded ``limit().collect()``
+    probes over the RAW edge rows, then the vertex rows: no shuffle, no
+    checkpoint, no count job, and an over-threshold graph pays only a
+    capped scan before its loop. ``driver_threshold <= 0`` always returns
+    None.
+
+    Id policy: string ids only. The local bodies order ids with Python
+    string comparison (== UTF8String byte order, since UTF-8 preserves
+    code-point order) and build string-schema frames, so any NULL or
+    non-``str`` id returns None and that input takes the distributed loop.
+    """
+    if driver_threshold <= 0:
+        return None
+    edge_cap = driver_threshold // 2
+    rows = edges.select(src, dst).limit(edge_cap + 1).collect()
+    if len(rows) > edge_cap:
+        return None
+    ids = [x for r in rows for x in r]
+    if vertices is not None:
+        budget = driver_threshold - 2 * len(rows)
+        vids = [r[0] for r in vertices.select(vertex_col).limit(budget + 1).collect()]
+        if len(vids) > budget:
+            return None
+        ids += vids
+    if not all(isinstance(x, str) for x in ids):
+        return None
+    und = sorted({(a, b) if a < b else (b, a) for a, b in rows if a != b})
+    adj: dict = {}
+    for a, b in und:
+        adj.setdefault(a, []).append(b)
+        adj.setdefault(b, []).append(a)
+    for ns in adj.values():
+        ns.sort()
+    return LocalGraph(
+        und, adj, list(dict.fromkeys(vids)) if vertices is not None else sorted(adj)
+    )

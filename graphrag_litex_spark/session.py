@@ -14,6 +14,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """About half of physical RAM, capped at 48g: the driver JVM shares the
+    host with its Python workers, so a heap sized past RAM gets the whole
+    process OOM-killed mid-run instead of spilling."""
+    try:
+        ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    except (ValueError, OSError, AttributeError):
+        return "48g"
+    return f"{max(1024, min(ram_mb // 2, 48 * 1024))}m"
+
+
 def get_spark(
     app_name: str = "graphrag_litex_spark",
     cores: int | None = None,
@@ -34,7 +45,7 @@ def get_spark(
         # extraction UDF (default 10k; 20k measured best at 150-byte rows).
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # zstd halves stage-table size vs snappy; shared-disk write

@@ -1,3 +1,5 @@
+import os
+
 import pytest
 
 from graphrag_litex_spark import datagen
@@ -8,7 +10,7 @@ from graphrag_litex_spark.session import get_spark
 def spark():
     s = get_spark(
         app_name="graphrag_litex_spark_tests",
-        cores=8,
+        cores=int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()),
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     yield s

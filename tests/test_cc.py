@@ -95,6 +95,32 @@ def test_driver_local_matches_distributed_path(spark):
     assert local == dist
 
 
+@pytest.mark.parametrize(
+    "verts, edges, want",
+    [
+        # NULL ids: a NULL vertex emits no row and a NULL endpoint links
+        # nothing, on both paths.
+        (
+            ["a", "b", None, "c", "d"],
+            [("a", "b"), ("b", None), (None, "c"), ("d", "c")],
+            {("a", "a"), ("b", "a"), ("c", "c"), ("d", "c")},
+        ),
+        # Integer-typed id column: labels keep the column's type.
+        ([1, 2, 3, 4, 5], [(1, 2), (2, 3), (5, 4)], {(1, 1), (2, 1), (3, 1), (4, 4), (5, 4)}),
+    ],
+    ids=["null_id", "int_ids"],
+)
+def test_null_and_non_string_ids_identical_across_paths(spark, verts, edges, want):
+    """NULL and non-string ids take the distributed loop on both settings of
+    ``driver_threshold`` (the small-graph valve admits string ids only), so
+    the two agree instead of the driver-local path raising."""
+    vdf = spark.createDataFrame(pd.DataFrame({"norm_name": verts}))
+    edf = spark.createDataFrame(pd.DataFrame(edges, columns=["src", "dst"]))
+    local = {tuple(r) for r in connected_components(vdf, edf).collect()}
+    dist = {tuple(r) for r in connected_components(vdf, edf, driver_threshold=0).collect()}
+    assert local == dist == want
+
+
 def test_edge_only_endpoints_identical_across_paths(spark):
     """Ids appearing only in edges propagate labels (a-x, x-b with x not a
     vertex still connects a and b; an edge-only id can be the component

@@ -157,6 +157,39 @@ def test_hierarchy_identity_random_graph(spark):
     assert local == dist
 
 
+@pytest.mark.parametrize(
+    "ids",
+    [
+        [f"n{i}" for i in range(8)] + [None],
+        list(range(9)),
+    ],
+    ids=["null_id", "int_ids"],
+)
+def test_hierarchy_null_and_non_string_ids_identical_across_paths(spark, ids):
+    """NULL ids and an integer-typed id column: the small-graph valve sends
+    both to the distributed loop, so the default threshold and
+    ``driver_threshold=0`` agree instead of the local hierarchy raising
+    (it builds community ids as ``"0_" + label``)."""
+    # Two triangles joined by the path 2-3-8-7-6 (list positions).
+    shape = [(0, 1), (1, 2), (0, 2), (2, 3), (4, 5), (5, 6), (4, 6), (6, 7), (3, 8), (7, 8)]
+    pairs = [(ids[i], ids[j]) for i, j in shape]
+    nodes = spark.createDataFrame(pd.DataFrame({"entity_id": ids}))
+    edges = spark.createDataFrame(pd.DataFrame(pairs, columns=["src_id", "dst_id"]))
+    # min_size=1 keeps the isolated NULL vertex's own community.
+    kw = dict(levels=2, min_size=1, lpa_iters=6)
+    local = set(map(tuple, C.detect_communities(nodes, edges, **kw).collect()))
+    dist = set(
+        map(tuple, C.detect_communities(nodes, edges, driver_threshold=0, **kw).collect())
+    )
+    assert local == dist and local
+    und = C._und_edges(edges)
+    lpa_local = {tuple(r) for r in C.label_propagation(nodes, und, iters=6).collect()}
+    lpa_dist = {
+        tuple(r) for r in C.label_propagation(nodes, und, iters=6, driver_threshold=0).collect()
+    }
+    assert lpa_local == lpa_dist and lpa_local
+
+
 def test_stats_and_summaries_with_shared_degrees(spark, clique_graph):
     """Passing a precomputed member_edge_degrees must not change results."""
     nodes, edges = clique_graph

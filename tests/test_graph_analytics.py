@@ -735,6 +735,67 @@ def test_hop_distances_driver_local_matches_distributed(spark):
     assert local == dist and local
 
 
+def test_hop_distances_non_string_sources_identical_across_paths(spark):
+    """Both paths take sources as ``str(s)``: integer sources reach the
+    string vertices they name, identically."""
+    from graphrag_litex_spark.operators.graph_analytics import hop_distances
+
+    pairs = [(str(a), str(b)) for a, b in [(1, 2), (2, 3), (3, 4), (1, 5), (6, 7)]]
+    e = _edges_df(spark, pairs)
+    srcs = [1, 6, 1, 99]
+    local = sorted(tuple(r) for r in hop_distances(e, srcs, max_hops=2).collect())
+    dist = sorted(
+        tuple(r) for r in hop_distances(e, srcs, max_hops=2, driver_threshold=0).collect()
+    )
+    assert local == dist
+    assert local == [
+        ("1", "1", 0), ("1", "1", 0), ("2", "1", 1), ("3", "1", 2),
+        ("5", "1", 1), ("6", "6", 0), ("7", "6", 1), ("99", "99", 0),
+    ]
+
+
+# Peels that empty on exactly round max_iters: a triangle-free path loses
+# every edge in round 1 at k=3; a triangle strip at k=4 loses its chords
+# and end edges in round 1, then the remaining path in round 2.
+_STRIP = [(f"v{i}", f"v{i + 1}") for i in range(5)] + [(f"v{i}", f"v{i + 2}") for i in range(4)]
+
+
+@pytest.mark.parametrize(
+    "pairs, k, rounds",
+    [([("a", "b"), ("b", "c"), ("c", "d")], 3, 1), (_STRIP, 4, 2)],
+    ids=["path_k3", "strip_k4"],
+)
+@pytest.mark.parametrize("driver_threshold", [100_000, 0], ids=["local", "distributed"])
+def test_k_truss_max_iters_boundary(spark, pairs, k, rounds, driver_threshold):
+    from graphrag_litex_spark.operators.graph_analytics import k_truss
+
+    e = _edges_df(spark, pairs)
+    assert k_truss(e, k, max_iters=rounds, driver_threshold=driver_threshold).collect() == []
+    with pytest.raises(RuntimeError, match="did not converge"):
+        k_truss(e, k, max_iters=rounds - 1, driver_threshold=driver_threshold)
+
+
+def test_neighborhood_vertex_gate_clamped_to_sketch_exactness(spark):
+    """A caller's driver_threshold cannot lift the exact-BFS gate past the
+    sketches' exact-coupon bound: on a 501-vertex star (every distance-2
+    ball is the whole component, past the bound) a huge threshold still
+    returns the sketch estimates of the threshold-0 loop, not exact counts.
+    Above the bound an estimate can depend on the order the union merges
+    sketches in (two threshold-0 runs gave N(1) = 1502 and 1505), so the
+    runs are compared within the sketch's ~1.6% relative error at lg_k=12,
+    over the rounds both emitted."""
+    from graphrag_litex_spark.operators.graph_analytics import neighborhood_function
+    from graphrag_litex_spark.oracle_graph import neighborhood_golden
+
+    pairs = [("hub", f"v{i:03d}") for i in range(500)]
+    e = _edges_df(spark, pairs)
+    high = dict(map(tuple, neighborhood_function(e, driver_threshold=1_000_000).collect()))
+    dist = dict(map(tuple, neighborhood_function(e, driver_threshold=0).collect()))
+    assert high != dict(neighborhood_golden(set(pairs), max_t=4))
+    ts = sorted(high.keys() & dist.keys())
+    assert [high[t] for t in ts] == pytest.approx([dist[t] for t in ts], rel=0.02)
+
+
 def test_neighborhood_driver_local_matches_distributed(spark):
     from graphrag_litex_spark.operators.graph_analytics import neighborhood_function
 
