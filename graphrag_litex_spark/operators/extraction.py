@@ -3,18 +3,22 @@
 The reference extracts entities/relationships per chunk with one LLM call
 per chunk fanned out by asyncio (/root/reference/extraction/
 simple_entity_extractor.py:47-124) and claims in a second pass
-(simple_claim_extractor.py:44-94). Here extraction is ONE pandas UDF applied
-to the chunk DataFrame: Spark hands the UDF whole Arrow batches, the
-deterministic extractor (functions/extract.py) runs per batch in a tight
-loop, and the result comes back as a single nested struct column that is
-then `explode`d into mentions / raw_edges / raw_claims — zero per-row Python
-bridging, no driver-side loops.
+(simple_claim_extractor.py:44-94). Here extraction is ONE ``mapInArrow``
+kernel, :func:`extract_items`, applied to the chunk DataFrame: Spark hands
+it whole Arrow record batches, the deterministic extractor
+(functions/extract.py) runs per batch in a tight loop, and the result comes
+back as a FLAT item stream — one row per extracted entity, relationship or
+claim, tagged by ``kind``. The ``items_mentions`` / ``items_raw_edges`` /
+``items_raw_claims`` views split it by kind with plain column expressions
+— zero per-row Python bridging, no driver-side loops. The batch pipeline,
+``KGPipeline.append_transcripts`` and the streaming delta feed
+(streaming/incremental.stream_extract) all run this one kernel.
 
 The extractor is pluggable (same stance as the reference's LLMClient): any
 ``text -> {"entities": [...], "relationships": [...], "claims": [...]}``
 function with this output shape (simple_entity_extractor.py:156-163) can be
-registered; an LLM-backed batch implementation would slot in here, with
-retry/backoff inside the batch function (reference analog
+passed to :func:`extract_items`; an LLM-backed implementation would slot in
+here, with retry/backoff inside the extractor (reference analog
 utils/llm_client.py:38-43,94-99).
 """
 
@@ -22,95 +26,15 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-EXTRACTION_SCHEMA = T.StructType(
-    [
-        T.StructField(
-            "entities",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("name", T.StringType()),
-                        T.StructField("type", T.StringType()),
-                        T.StructField("description", T.StringType()),
-                    ]
-                )
-            ),
-        ),
-        T.StructField(
-            "relationships",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("source", T.StringType()),
-                        T.StructField("target", T.StringType()),
-                        T.StructField("description", T.StringType()),
-                        T.StructField("strength", T.DoubleType()),
-                    ]
-                )
-            ),
-        ),
-        T.StructField(
-            "claims",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("content", T.StringType()),
-                        T.StructField("entities", T.ArrayType(T.StringType())),
-                    ]
-                )
-            ),
-        ),
-    ]
-)
-
-
-def make_extract_udf(extractor: Callable[[str], dict] | None = None):
-    """Build the Arrow-batched extraction UDF around ``extractor``.
-
-    Per-row failures produce an empty extraction rather than a task failure
-    (the reference logs & skips failed chunks,
-    simple_entity_extractor.py:114-117).
-    """
-    if extractor is None:
-        from graphrag_litex_spark.functions.extract import extract_turn as extractor
-
-    @F.pandas_udf(EXTRACTION_SCHEMA)
-    def extract_udf(texts: pd.Series) -> pd.DataFrame:
-        ents, rels, clms = [], [], []
-        for txt in texts:
-            try:
-                res = extractor(txt) if txt else {"entities": [], "relationships": [], "claims": []}
-            except Exception:
-                res = {"entities": [], "relationships": [], "claims": []}
-            ents.append([(e["name"], e["type"], e["description"]) for e in res["entities"]])
-            rels.append(
-                [
-                    (r["source"], r["target"], r["description"], float(r["strength"]))
-                    for r in res["relationships"]
-                ]
-            )
-            clms.append([(c["content"], list(c["entities"])) for c in res["claims"]])
-        return pd.DataFrame({"entities": ents, "relationships": rels, "claims": clms})
-
-    return extract_udf
-
-
-def extract_chunks(chunks: DataFrame, extractor: Callable[[str], dict] | None = None) -> DataFrame:
-    """chunks(chunk_id, conv_id, turn_idx, text, ...) -> + extraction struct."""
-    return chunks.withColumn("extraction", make_extract_udf(extractor)(F.col("text")))
-
-
 # Flat item-stream schema: one row per extracted entity/relationship/claim.
-# Converting flat string/double columns through Arrow is vectorized; the
-# nested array<struct> roundtrip of EXTRACTION_SCHEMA costs ~8x more Python
-# time per row (measured: 84k rows/s/core raw extractor vs ~10k through the
-# nested UDF). The pipeline hot path uses this; the nested UDF remains as
-# the reference-shaped API.
+# Converting flat string/double columns through Arrow is vectorized; a
+# nested array<struct> roundtrip of the same items costs ~8x more Python
+# time per row (measured: 84k rows/s/core raw extractor vs ~10k through a
+# nested-struct pandas UDF).
 #
 # The schema is deliberately NARROW (8 cols, kind-overloaded f1/f2/f3):
 # the item stream is ~4x the row count of the corpus, so every byte shipped
@@ -245,7 +169,9 @@ def extract_items(chunks: DataFrame, extractor: Callable[[str], dict] | None = N
 
 
 def items_mentions(items: DataFrame) -> DataFrame:
-    """S3 mentions from the flat item stream."""
+    """S3 mentions from the flat item stream, with provenance instance
+    (source_id, chunk_id) — the reference's EntityInstance attach,
+    simple_entity_extractor.py:176-189."""
     return items.where(F.col("kind") == "e").select(
         "source_id",
         chunk_id_col().alias("chunk_id"),
@@ -257,7 +183,8 @@ def items_mentions(items: DataFrame) -> DataFrame:
 
 
 def items_raw_edges(items: DataFrame) -> DataFrame:
-    """S4 raw_edges from the flat item stream."""
+    """S4 raw_edges from the flat item stream (names as temp ids,
+    simple_entity_extractor.py:210-211)."""
     return items.where(F.col("kind") == "r").select(
         "source_id",
         chunk_id_col().alias("chunk_id"),
@@ -270,7 +197,8 @@ def items_raw_edges(items: DataFrame) -> DataFrame:
 
 
 def items_raw_claims(items: DataFrame) -> DataFrame:
-    """Raw claims from the flat item stream."""
+    """Raw claims from the flat item stream, with provenance
+    (simple_claim_extractor.py:83-91)."""
     return items.where(F.col("kind") == "c").select(
         "source_id",
         chunk_id_col().alias("chunk_id"),
@@ -279,58 +207,3 @@ def items_raw_claims(items: DataFrame) -> DataFrame:
         "entity_names",
     )
 
-
-def explode_mentions(extractions: DataFrame) -> DataFrame:
-    """S3 mentions: one row per extracted entity mention, with provenance.
-
-    Provenance instance = (source_id, chunk_id), mirroring the reference's
-    EntityInstance attach at simple_entity_extractor.py:176-189.
-    """
-    return extractions.select(
-        F.col("conv_id").alias("source_id"),
-        "chunk_id",
-        "turn_idx",
-        F.explode("extraction.entities").alias("e"),
-    ).select(
-        "source_id",
-        "chunk_id",
-        "turn_idx",
-        F.col("e.name").alias("name"),
-        F.col("e.type").alias("type"),
-        F.col("e.description").alias("description"),
-    )
-
-
-def explode_raw_edges(extractions: DataFrame) -> DataFrame:
-    """S4 raw_edges: one row per extracted relationship (names as temp ids,
-    simple_entity_extractor.py:210-211)."""
-    return extractions.select(
-        F.col("conv_id").alias("source_id"),
-        "chunk_id",
-        "turn_idx",
-        F.explode("extraction.relationships").alias("r"),
-    ).select(
-        "source_id",
-        "chunk_id",
-        "turn_idx",
-        F.col("r.source").alias("source"),
-        F.col("r.target").alias("target"),
-        F.col("r.description").alias("pred"),
-        F.col("r.strength").alias("strength"),
-    )
-
-
-def explode_raw_claims(extractions: DataFrame) -> DataFrame:
-    """Raw claims with provenance (simple_claim_extractor.py:83-91)."""
-    return extractions.select(
-        F.col("conv_id").alias("source_id"),
-        "chunk_id",
-        "turn_idx",
-        F.explode("extraction.claims").alias("c"),
-    ).select(
-        "source_id",
-        "chunk_id",
-        "turn_idx",
-        F.col("c.content").alias("content"),
-        F.col("c.entities").alias("entity_names"),
-    )

@@ -494,9 +494,16 @@ def neighborhood_function(
 
     Per round: ball(v, t) = ball(v, t-1) ∪ (∪ over neighbors n of
     ball(n, t-1)) — ONE adjacency hash join + one `hll_union_agg`
-    (map-side-combinable: HLL union is a register max, order-free and
-    partitioning-invariant). State is |V| sketches of 2^lg_k registers —
-    the whole point of HyperBall: exact BFS state is O(V^2), sketches make
+    (map-side-combinable). While every ball stays under the sketches'
+    exact coupon bound the union, and so the estimate, is independent of
+    merge order and partitioning. Above that bound it is NOT: the
+    estimate depends on the order in which `hll_union_agg` merges
+    sketches (HIP vs composite estimator), so two distributed runs on a
+    large-ball graph can differ in the last digits, and even in the
+    early-exit round; the clamp test
+    (test_neighborhood_vertex_gate_clamped_to_sketch_exactness) compares
+    such runs with a 2% relative tolerance over the rounds both emitted.
+    State is |V| sketches of 2^lg_k registers — the whole point of HyperBall: exact BFS state is O(V^2), sketches make
     it O(V * 2^lg_k) with ~1.6%/sqrt(2^lg_k) relative error. lg_k is the
     accuracy/state knob (12 -> ~2.5% at true scale; at test scale the
     sketches stay in exact coupon mode for balls << 2^lg_k, so estimates

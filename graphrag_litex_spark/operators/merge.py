@@ -52,10 +52,13 @@ def merge_nodes(
     source_id, chunk_id. Output: one row per canonical entity (E1).
 
     ``n_instances`` is always EXACT; the stored ``instances`` array is
-    capped at ``max_instances`` (sorted prefix) — hot entities at corpus
-    scale would otherwise carry O(corpus) provenance arrays in one row (the
-    full per-mention provenance remains queryable in the mentions stage
-    table). ``max_instances=None`` keeps everything (reference semantics,
+    capped at ``max_instances`` — hot entities at corpus scale would
+    otherwise carry O(corpus) provenance arrays in one row (the full
+    per-mention provenance remains queryable in the mentions stage table).
+    On the salted path (the default, and the one the pipeline runs) the
+    cap keeps an unsorted sample: which instances are kept, and their
+    order, is unspecified. The unsalted path keeps the sorted prefix.
+    ``max_instances=None`` keeps everything (reference semantics,
     models/entity.py:55-57).
     """
     cap = lambda c: F.slice(c, 1, max_instances) if max_instances else c  # noqa: E731

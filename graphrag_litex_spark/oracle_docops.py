@@ -697,6 +697,36 @@ def span_removal_golden(doc_ids: list, texts: list, k: int = 8) -> pa.Table:
     )
 
 
+def ngram_repetition_golden(
+    doc_ids: list, texts: list, top_ns=(2, 3, 4), dup_ns=(5, 10)
+) -> pa.Table:
+    """Sequential twin of scrub.ngram_repetition_stats: per document, the
+    (top-n-gram, duplicate-n-gram) character fractions of the normalized
+    text; NULL text -> NULL n_chars and 0.0 fractions."""
+    from collections import Counter
+
+    def fracs(norm: str, n: int) -> tuple[float, float]:
+        toks = norm.split(" ") if norm else []
+        counts = Counter(" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1))
+        # most frequent gram; ties go to the lexicographically smallest
+        g, c = min(counts.items(), key=lambda gc: (-gc[1], gc[0]), default=("", 0))
+        dup = sum((k - 1) * len(h) for h, k in counts.items())
+        return tuple(round_half_up(x / len(norm)) if norm else 0.0 for x in (c * len(g), dup))
+
+    norms = [norm_text(t) for t in texts]
+    cols = {f"top{n}gram_char_frac": [fracs(s, n)[0] for s in norms] for n in top_ns}
+    cols |= {f"dup{n}gram_char_frac": [fracs(s, n)[1] for s in norms] for n in dup_ns}
+    return pa.table(
+        {
+            "doc_id": pa.array(doc_ids),
+            "n_chars": pa.array(
+                [None if t is None else len(s) for t, s in zip(texts, norms)], pa.int64()
+            ),
+            **{k: pa.array(v, pa.float64()) for k, v in cols.items()},
+        }
+    )
+
+
 def _dhash_py(img, hash_size: int = 8) -> int:
     """Sequential dHash twin of multimodal.image_dhash: luma -> the same
     integer-index nearest-neighbor downsample -> row-major gradient bits

@@ -44,7 +44,6 @@ from graphrag_litex_spark.operators import merge as merge_ops
 from graphrag_litex_spark.operators.cc import connected_components
 from graphrag_litex_spark.operators.extraction import (
     extract_items,
-    items_mentions,
     items_raw_claims,
     items_raw_edges,
 )
@@ -295,30 +294,12 @@ class PipelineConfig:
     link_max_block_size: int | None = None
     link_auto_valve_names: int = 1_000_000
     link_auto_block_size: int = 10_000
-    salted: bool = True
-    salt_buckets: int = 16
-    max_instances: int | None = 10_000  # provenance-array cap per node/edge
-    cc_max_iter: int = 25
-    # CC physical strategy (operators/cc.py): "minlabel" (rounds = component
-    # diameter — right for name-variant clusters, diameter 2-3) or
-    # "alternating" (large-star/small-star, O(log n) rounds on any
-    # topology — the safe choice when the similarity graph can chain, e.g.
-    # near-dup corpora). Identical output either way.
-    cc_algorithm: str = "minlabel"
-    # Submit the mutually independent nodes/triples/claims stage builds as
-    # concurrent Spark jobs (separate driver threads): overlaps one stage's
-    # under-parallelized final reduce + write with the next one's scan,
-    # shrinking the fixed stage-boundary tail that caps full-pipeline
-    # scaling on short runs. Purely a scheduling change — stage outputs,
-    # fingerprints, and resume semantics are identical either way.
-    concurrent_stages: bool = True
     # D1 broadcast valve: hint F.broadcast on the canon-map resolution
     # joins only while the map's measured parquet size (manifest bytes) is
     # at or under this. Above it (10^8+ distinct names at 10^12 turns) the
     # join falls back to AQE-managed shuffle join. 0 disables the hint
     # unconditionally.
     broadcast_threshold_bytes: int = 200 * 1024 * 1024
-    lpa_iters: int = 8
     min_community_size: int = 3  # config.py:41
     levels: int = 3  # community_detection.py:35
     # Incremental community refresh: when True and a previous communities
@@ -389,8 +370,9 @@ class KGPipeline:
         self._manifest_path = os.path.join(out_dir, "_manifest.json")
         import threading
 
-        # concurrent_stages runs _materialize from several driver threads;
-        # the manifest dict + file write are the only shared mutable state.
+        # The nodes/triples/edges/claims builds run _materialize from several
+        # driver threads; the manifest dict + file write are the only shared
+        # mutable state.
         self._manifest_lock = threading.Lock()
 
     # ---- cross-process build lock ----------------------------------------
@@ -860,7 +842,7 @@ class KGPipeline:
 
         # Hot-key stragglers bound the merge stages' reduce time: scale the
         # salt so a hot entity's largest bucket shrinks with the cluster.
-        salt_buckets = max(cfg.salt_buckets, self.spark.sparkContext.defaultParallelism * 2)
+        salt_buckets = max(16, self.spark.sparkContext.defaultParallelism * 2)
 
         # S3/S4 + raw claims: pushdown-filtered VIEWS over the item table —
         # materializing them again would re-write the corpus-sized
@@ -934,13 +916,7 @@ class KGPipeline:
                 pairs = candidate_pairs(
                     names, cfg.sim_threshold, max_block_size=max_block
                 )
-            labels = connected_components(
-                names,
-                pairs,
-                id_col="norm_name",
-                max_iter=cfg.cc_max_iter,
-                algorithm=cfg.cc_algorithm,
-            )
+            labels = connected_components(names, pairs, id_col="norm_name")
             # CC's output is itself checkpointed (or driver-built), so the
             # names cache can be dropped before the stage write.
             release(names)
@@ -974,9 +950,7 @@ class KGPipeline:
         def build_nodes() -> DataFrame:
             return merge_ops.merge_nodes(
                 results["mentions"].join(canon, "norm_name"),
-                salted=cfg.salted,
                 salt_buckets=salt_buckets,
-                max_instances=cfg.max_instances,
             )
 
         def canon_edges() -> DataFrame:
@@ -1027,16 +1001,6 @@ class KGPipeline:
             )
             return merge_ops.merge_claims(per_claim)
 
-        # nodes / triples / claims are mutually independent given canon_map
-        # (disjoint kind-filtered views over the extraction table), so their
-        # builds are submitted as CONCURRENT Spark jobs: each of these
-        # stages under-parallelizes in its final reduce + write, and running
-        # them back-to-back leaves the cluster idle at every stage boundary
-        # — the fixed tail that capped full-pipeline scaling at 4->16 cores.
-        # Concurrent submission overlaps one stage's write/reduce with the
-        # next one's scan (Spark's scheduler interleaves tasks from separate
-        # jobs). Sequential fallback when only a prefix is requested or the
-        # valve is off.
         # S8 edges (E2): pair merge over the already-resolved,
         # already-strength-filtered triples stage (same min_strength, so the
         # merge's own filter is a no-op kept for semantics).
@@ -1053,42 +1017,42 @@ class KGPipeline:
                     "chunk_id",
                 ),
                 min_strength=cfg.min_strength,
-                salted=cfg.salted,
                 salt_buckets=salt_buckets,
-                max_instances=cfg.max_instances,
             )
 
-        run_claims = until not in ("nodes", "triples", "edges")
-        if cfg.concurrent_stages and run_claims:
-            from concurrent.futures import ThreadPoolExecutor
+        # nodes / triples / claims are mutually independent given canon_map
+        # (disjoint kind-filtered views over the extraction table), so their
+        # builds are submitted as CONCURRENT Spark jobs: each of these
+        # stages under-parallelizes in its final reduce + write, and running
+        # them back-to-back leaves the cluster idle at every stage boundary
+        # — the fixed tail that capped full-pipeline scaling at 4->16 cores.
+        # Concurrent submission overlaps one stage's write/reduce with the
+        # next one's scan (Spark's scheduler interleaves tasks from separate
+        # jobs). edges depends ONLY on the triples stage: it is chained
+        # behind triples in the same worker so it overlaps the nodes/claims
+        # stragglers — the stage timeline is max(nodes, claims, triples +
+        # edges). The ``until`` prefix only decides which builds are
+        # submitted.
+        run_edges = until not in ("nodes", "triples")
+        run_claims = run_edges and until != "edges"
 
-            # edges depends ONLY on the triples stage: chain it behind
-            # triples in the same worker so it overlaps the nodes/claims
-            # stragglers instead of waiting for all three — the stage
-            # timeline was max(nodes, triples, claims) + edges; now it is
-            # max(nodes, claims, triples + edges) (~1s at sf1 local[32]).
-            def _triples_then_edges():
-                results["triples"] = mat("triples", build_triples)
-                return mat("edges", build_edges)
-
-            with ThreadPoolExecutor(3, thread_name_prefix="kg_stage") as pool:
-                f_nodes = pool.submit(mat, "nodes", build_nodes)
-                f_edges = pool.submit(_triples_then_edges)
-                f_claims = pool.submit(mat, "claims", build_claims)
-                results["nodes"] = f_nodes.result()
-                results["edges"] = f_edges.result()
-                results["claims"] = f_claims.result()
-        else:
-            results["nodes"] = mat("nodes", build_nodes)
+        def _triples_then_edges():
             results["triples"] = mat("triples", build_triples)
-            if run_claims:
-                results["claims"] = mat("claims", build_claims)
-        if until in ("nodes", "triples"):
-            return results
+            return mat("edges", build_edges) if run_edges else None
 
-        if "edges" not in results:
-            results["edges"] = mat("edges", build_edges)
-        if until in ("edges", "claims"):
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(3, thread_name_prefix="kg_stage") as pool:
+            f_nodes = pool.submit(mat, "nodes", build_nodes)
+            f_edges = pool.submit(_triples_then_edges)
+            f_claims = pool.submit(mat, "claims", build_claims) if run_claims else None
+            results["nodes"] = f_nodes.result()
+            edges = f_edges.result()
+            if run_edges:
+                results["edges"] = edges
+            if run_claims:
+                results["claims"] = f_claims.result()
+        if until in ("nodes", "triples", "edges", "claims"):
             return results
 
         # S10 communities (F1/F2 via LPA) + stats (E5) + min-size (E6).
@@ -1143,7 +1107,6 @@ class KGPipeline:
                 results["edges"],
                 levels=cfg.levels,
                 min_size=cfg.min_community_size,
-                lpa_iters=cfg.lpa_iters,
                 seed_labels=seed,
             )
 

@@ -227,12 +227,13 @@ def test_ngram_repetition_partitioning_invariant(spark):
 
 
 def test_ngram_engines_agree_on_adversarial_corpus(spark):
-    """arrow (default kernel) == sql (relational formulation), including
-    NULL text, empty text, unicode junk, whitespace runs, and tie-broken
-    top grams - the differential the docstring promises."""
+    """The Arrow kernel == the pure-Python golden, including NULL text,
+    empty text, unicode junk, whitespace runs, and tie-broken top grams -
+    the differential the docstring promises."""
     import pandas as pd
 
     from graphrag_litex_spark.operators.scrub import ngram_repetition_stats
+    from graphrag_litex_spark.oracle_docops import ngram_repetition_golden
 
     rows = [
         (1, "a b a b a b c"),
@@ -247,10 +248,10 @@ def test_ngram_engines_agree_on_adversarial_corpus(spark):
     docs = spark.createDataFrame(
         pd.DataFrame(rows, columns=["doc_id", "text"]).astype({"doc_id": "int64"})
     )
-    a = ngram_repetition_stats(docs)
-    b = ngram_repetition_stats(docs, engine="sql")
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    assert a.count() == len(rows)
+    got = sorted(tuple(r) for r in ngram_repetition_stats(docs).collect())
+    gold = ngram_repetition_golden([d for d, _ in rows], [t for _, t in rows])
+    assert got == sorted(zip(*gold.to_pydict().values()))
+    assert len(got) == len(rows)
 
 
 def test_norm_text_col_fused_equals_two_pass(spark):

@@ -17,7 +17,7 @@ def split_corpus(spark, corpus_sf0001, tmp_path_factory):
     return str(d), t, half
 
 
-def test_incremental_extraction_appends(spark, split_corpus, tmp_path_factory):
+def test_incremental_extraction_appends(spark, corpus_sf0001, split_corpus, tmp_path_factory):
     from graphrag_litex_spark.streaming.incremental import stream_extract
 
     input_dir, t, half = split_corpus
@@ -36,17 +36,51 @@ def test_incremental_extraction_appends(spark, split_corpus, tmp_path_factory):
     n2 = mentions.count()
     assert n2 > n1
 
-    # The union of streamed deltas equals the batch pipeline's mentions.
-    from graphrag_litex_spark.operators.extraction import explode_mentions, extract_chunks
+    # The union of the streamed deltas is multiset-equal to the pure-Python
+    # goldens, and each delta keeps its column names, order and types.
+    from collections import Counter
 
-    batch = extract_chunks(
-        spark.read.parquet(input_dir).select(
-            "conv_id", "turn_idx", "text",
-            F.concat_ws("_", "conv_id", "turn_idx").alias("chunk_id"),
-        )
-    ).drop("text")
-    want = explode_mentions(batch).count()
-    assert n2 == want
+    def key(vals):  # lists (claim entity names) as hashable tuples
+        return tuple(tuple(v) if isinstance(v, list) else v for v in vals)
+
+    def delta(name, schema, cols):
+        df = spark.read.parquet(os.path.join(out, f"{name}_delta"))
+        assert df.schema.simpleString() == f"struct<{schema}>"
+        rows = df.collect()
+        assert all(r["chunk_id"] == f"{r['source_id']}_{r['turn_idx']}" for r in rows)
+        return Counter(key(r[c] for c in cols) for r in rows)
+
+    def golden(name, cols):
+        tbl = pq.read_table(corpus_sf0001[name]).to_pydict()
+        return Counter(key(vals) for vals in zip(*(tbl[c] for c in cols)))
+
+    got = delta(
+        "mentions",
+        "source_id:string,chunk_id:string,turn_idx:int,name:string,"
+        "type:string,description:string",
+        ["source_id", "turn_idx", "name", "type", "description"],
+    )
+    assert sum(got.values()) == n2
+    assert got == golden(
+        "golden_mentions", ["conv_id", "turn_idx", "name", "type", "description"]
+    )
+    got = delta(
+        "raw_edges",
+        "source_id:string,chunk_id:string,turn_idx:int,source:string,"
+        "target:string,pred:string,strength:double",
+        ["source_id", "turn_idx", "source", "target", "pred", "strength"],
+    )
+    assert got == golden(
+        "golden_raw_triples",
+        ["conv_id", "turn_idx", "subj_surface", "obj_surface", "pred", "strength"],
+    )
+    got = delta(
+        "raw_claims",
+        "source_id:string,chunk_id:string,turn_idx:int,content:string,"
+        "entity_names:array<string>",
+        ["source_id", "turn_idx", "content", "entity_names"],
+    )
+    assert got == golden("golden_claims", ["conv_id", "turn_idx", "content", "entities"])
 
 
 def test_windowed_turn_activity_batch_semantics(spark, corpus_sf0001):
